@@ -2,7 +2,7 @@
 
 entry(spark)  — flagship extraction: derive an interleaved span table
                 from /root/testdata/sf0.001/documents.parquet and run
-                the full mapInPandas extraction pipeline over it.
+                the full mapInArrow extraction pipeline over it.
 queries()     — one entry per implemented operator (SURVEY.md §2 +
                 training-data ops); each (spark, sf_dir) → DataFrame.
 oracle_sql()  — DuckDB-equivalent SQL for EVERY entry (50/50 —

@@ -13,7 +13,7 @@ Methodology notes (also in BENCH/BASELINE.md):
     JIT before the timed stage, so fixed startup cost (identical at
     both levels) is excluded from the throughput measurement;
   * the timed stage is the full pipeline: parquet scan → salted
-    repartition → mapInPandas extraction → noop write (all columns
+    repartition → mapInArrow extraction → noop write (all columns
     computed).
 
 Usage:  python bench/scaling.py [--docs 20000] [--replicate 32]
@@ -294,7 +294,7 @@ executors. No real cluster exists in this sandbox, so (per driver
 instruction) the SAME job ran at two parallelism levels in separate
 processes on identical input.
 
-**Job**: parquet scan → salted repartition → mapInPandas extraction
+**Job**: parquet scan → salted repartition → mapInArrow extraction
 (full strict/lenient/raw ladder, HTML strip, span encoding) → noop
 write. Input: deterministic fixture corpus, {args.docs} docs × {args.replicate}
 JVM-side replicas = {a["n_docs"]} documents (interleaved text/html/pdf/media,

@@ -9,7 +9,7 @@ interleaved text+media documents:
 
     documents(doc_id: string,
               spans: array<struct<kind,text,media_ref,offset:int>>)
-        --mapInPandas(extract)-->
+        --mapInArrow(extract)-->
     documents_extracted(doc_id, extraction_successful, extraction_method,
                         spans, n_pages, n_chars, n_words, has_tables,
                         has_images, warning, error)

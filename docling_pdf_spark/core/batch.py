@@ -1,10 +1,11 @@
 """Vectorized-batch wrappers around the per-doc semantics.
 
-These are the functions the Spark stage feeds Arrow batches into via
-``mapInPandas`` (iterator form — streams batches, bounds memory for
-oversized docs; SURVEY.md §2a X1/X15). They are plain
-pandas-DataFrame-in / pandas-DataFrame-out so the oracle and tests can
-call them without a SparkSession.
+The Spark stage (``pipeline._chunked_extract_arrow`` under
+``mapInArrow``, iterator form — streams batches, bounds memory for
+oversized docs; SURVEY.md §2a X1/X15) feeds Arrow batches into
+``extract_arrow_batch``. ``extract_pdf_batch`` is the same transform
+pandas-DataFrame-in / pandas-DataFrame-out. Neither needs a
+SparkSession, so the oracle and tests can call them directly.
 
 The per-doc loop INSIDE a batch is unavoidable (each payload is an
 opaque byte stream, like the reference's one-PDF-at-a-time converter
@@ -14,8 +15,6 @@ Arrow batch, never per row.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
 import pyarrow as pa
@@ -30,13 +29,6 @@ def extract_pdf_batch(batch: pd.DataFrame) -> pd.DataFrame:
     spans_col = batch["spans"].tolist()
     rows = [extract_document(d, s) for d, s in zip(doc_ids, spans_col)]
     return pd.DataFrame(rows, columns=OUTPUT_COLUMNS)
-
-
-def extract_iter(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entrypoint: Iterator[pd.DataFrame] → Iterator[pd.DataFrame]."""
-    for batch in batches:
-        if len(batch):
-            yield extract_pdf_batch(batch)
 
 
 def extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:

@@ -20,6 +20,23 @@ operators keep their zero-Exchange, embarrassingly-parallel shape (one
 narrow Python stage over the pruned (id, text) projection — the
 repo-sanctioned Arrow surface, no row-at-a-time UDFs).
 
+Every public `*_arrow` kernel is one per-document function handed to
+`per_doc_arrow(docs, id_col, text_col, fields, fn, many=False)`, the
+module's only `mapInArrow` call. The harness owns the batch plumbing;
+the kernels own only the per-document compute:
+
+  * input: `spread_unsplittable(docs.select(id_col, text_col))`;
+  * output schema: the id field as scanned, then `fields` (StructFields);
+  * NULL text emits no row and never reaches `fn`;
+  * `fn(text)` returns None for no row; with many=False one row as a
+    tuple of field values (in `fields` order); with many=True a 1-D
+    int64 array, one row per element, for a single int64 field;
+  * output rows keep batch order, ids are `take`n from the input batch.
+
+A kernel that must keep a row for NULL text (repetition_stats_arrow)
+projects `coalesce(text, '')` before the stage, so the harness has one
+NULL rule.
+
 Exactness: `_md5_low60(b)` == conv(substring(md5(x),18,15),16,10)
 by construction — md5 hex chars 18..32 (1-indexed) are the low nibble
 of digest byte 8 plus bytes 9..15, i.e. int.from_bytes(digest[8:16],
@@ -42,6 +59,12 @@ from docling_pdf_spark.functions.scanspread import spread_unsplittable
 
 _MASK60 = (1 << 60) - 1
 
+# per-document int64 transients (SimHash tokens x n_bits votes, MinHash
+# num_hashes x grams) are built this many hashes at a time: unchunked
+# they take ~0.5 GB for a single 1M-gram document, times one per
+# concurrent Arrow worker
+_CHUNK = 65536
+
 # Java's default (non-UNICODE_CHARACTER_CLASS) \s — Python's re \s would
 # additionally match U+00A0 etc. and diverge from F.split(col, "\\s+")
 _JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
@@ -53,18 +76,71 @@ def md5_low60(data: bytes) -> int:
     return int.from_bytes(_md5(data).digest()[8:16], "big") & _MASK60
 
 
-def _winnow_doc(t: str, k: int, w: int):
-    """Distinct winnowed fingerprints of one document, or None when the
-    JVM plan would produce no rows (len < k, or fewer hashes than w)."""
-    n = len(t)
-    m = n - k + 1
+def _tokens(t: str) -> list[str]:
+    """Non-empty tokens of the JVM `F.split(text, "\\s+")` tokenizer
+    (Java whitespace; leading/trailing whitespace yields no token)."""
+    return [w for w in _JAVA_WS.split(t) if w != ""]
+
+
+def _long_fields(*names):
+    from pyspark.sql import types as T
+
+    return [T.StructField(n, T.LongType(), False) for n in names]
+
+
+def per_doc_arrow(docs, id_col, text_col, fields, fn, many=False):
+    """(id, *fields) from one narrow mapInArrow stage applying fn to
+    each non-NULL text — the contract is in the module docstring."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    sel = spread_unsplittable(docs.select(id_col, text_col))
+    names = [id_col] + [f.name for f in fields]
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            keep, rows = [], []
+            for j, t in enumerate(b.column(1).to_pylist()):
+                r = None if t is None else fn(t)
+                if r is not None:
+                    keep.append(j)
+                    rows.append(r)
+            idx = np.asarray(keep, dtype=np.int64)
+            if many:
+                idx = np.repeat(idx, [len(r) for r in rows])
+                cols = [np.concatenate(rows) if rows else np.empty(0, np.int64)]
+            else:
+                cols = list(zip(*rows)) or [[] for _ in fields]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(idx))]
+                + [pa.array(c, type=ty) for c, ty in zip(cols, types)],
+                names=names,
+            )
+
+    return sel.mapInArrow(gen, T.StructType([sel.schema.fields[0], *fields]))
+
+
+def _window_min_unique(hs, w: int):
+    """Distinct minima over each length-w window of consecutive gram
+    hashes; None (no row, as in the JVM plan) when there are fewer
+    than w hashes."""
+    m = len(hs)
     if m < w:
         return None
+    return np.unique(np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)]))
+
+
+def _md5_grams(t: str, k: int):
+    """md5_low60 of every character k-gram of t, as int64."""
+    m = max(len(t) - k + 1, 0)
     hs = np.empty(m, dtype=np.int64)
     from_bytes = int.from_bytes
     h = _md5
     tb = t.encode("utf-8")
-    if len(tb) == n:  # ASCII: byte slices == code-point slices
+    if len(tb) == len(t):  # ASCII: byte slices == code-point slices
         for i in range(m):
             hs[i] = from_bytes(h(tb[i : i + k]).digest()[8:16], "big") & _MASK60
     else:
@@ -73,47 +149,20 @@ def _winnow_doc(t: str, k: int, w: int):
                 from_bytes(h(t[i : i + k].encode("utf-8")).digest()[8:16], "big")
                 & _MASK60
             )
-    # min over each length-w window of consecutive gram hashes
-    wm = np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)])
-    return np.unique(wm)
+    return hs
 
 
 def winnow_fingerprints_arrow(docs, k, w, id_col, text_col):
     """(id, fingerprint) — bit-identical to the JVM expression form of
     operators.winnow.winnow_fingerprints(hash_mode='portable')."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("fingerprint", T.LongType(), False),
-        ]
+    return per_doc_arrow(
+        docs,
+        id_col,
+        text_col,
+        _long_fields("fingerprint"),
+        lambda t: _window_min_unique(_md5_grams(t, k), w),
+        many=True,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                u = _winnow_doc(t, k, w)
-                if u is None:
-                    continue
-                counts[j] = len(u)
-                parts.append(u)
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            fps = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(fps, type=pa.int64())],
-                names=[id_col, "fingerprint"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def _doc_grams(t: str, n: int) -> list[str]:
@@ -131,43 +180,32 @@ def _doc_grams(t: str, n: int) -> list[str]:
 def bucketed_grams_arrow(docs, n, n_buckets, id_col, text_col):
     """(id, bucket) one row per gram occurrence — twin of operators.dsir
     ._bucketed_grams(hash_mode='portable')."""
-    from pyspark.sql import types as T
+    low60 = md5_low60
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("bucket", T.LongType(), False)]
+    def buckets(t):
+        grams = _doc_grams(t, n)
+        return np.fromiter(
+            (low60(g.encode("utf-8")) % n_buckets for g in grams),
+            dtype=np.int64,
+            count=len(grams),
+        )
+
+    return per_doc_arrow(
+        docs, id_col, text_col, _long_fields("bucket"), buckets, many=True
     )
 
-    def gen(batches):
-        import pyarrow as pa
 
-        low60 = md5_low60
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                grams = _doc_grams(t, n)
-                if not grams:
-                    continue
-                counts[j] = len(grams)
-                parts.append(
-                    np.fromiter(
-                        (low60(g.encode("utf-8")) % n_buckets for g in grams),
-                        dtype=np.int64,
-                        count=len(grams),
-                    )
-                )
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            bk = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(bk, type=pa.int64())],
-                names=[id_col, "bucket"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+def _minhash(base, a, b, m31):
+    """min((a_i*base + b_i) % m31) per hash i — the (num_hashes x
+    grams) matrix is built _CHUNK grams at a time with a running
+    minimum. a*base < 2^31 * 2^31 = 2^62: no int64 overflow."""
+    sig = np.full(len(a), m31, dtype=np.int64)
+    for s in range(0, len(base), _CHUNK):
+        x = a * base[s : s + _CHUNK]
+        x += b
+        x %= m31
+        np.minimum(sig, x.min(axis=1), out=sig)
+    return sig
 
 
 def minhash_signatures_portable_arrow(docs, params, n, id_col, text_col):
@@ -176,69 +214,50 @@ def minhash_signatures_portable_arrow(docs, params, n, id_col, text_col):
     md5_low60(gram) % M31 over DISTINCT word-n-grams, mh_i =
     min((a_i*base+b_i) % M31). Docs with no grams emit no row (the
     groupBy over zero exploded rows produced none)."""
-    from pyspark.sql import types as T
-
     from docling_pdf_spark.operators.dedup import MERSENNE31
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    k = len(params)
-    out_schema = T.StructType(
-        [sel.schema.fields[0]]
-        + [T.StructField(f"mh_{i}", T.LongType(), False) for i in range(k)]
-    )
     a_arr = np.array([a for a, _ in params], dtype=np.int64).reshape(-1, 1)
     b_arr = np.array([b for _, b in params], dtype=np.int64).reshape(-1, 1)
+    low60 = md5_low60
+    m31 = MERSENNE31
 
-    def gen(batches):
-        import pyarrow as pa
+    def signature(t):
+        grams = set(_doc_grams(t, n))
+        if not grams:
+            return None
+        base = np.fromiter(
+            (low60(g.encode("utf-8")) % m31 for g in grams),
+            dtype=np.int64,
+            count=len(grams),
+        )
+        return tuple(_minhash(base, a_arr, b_arr, m31).tolist())
 
-        low60 = md5_low60
-        m31 = MERSENNE31
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            sigs = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                grams = set(_doc_grams(t, n))
-                if not grams:
-                    continue
-                base = np.fromiter(
-                    (low60(g.encode("utf-8")) % m31 for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                # a*base < 2^31 * 2^31 = 2^62: no int64 overflow
-                sigs.append(((a_arr * base + b_arr) % m31).min(axis=1))
-                keep.append(j)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            mat = (
-                np.stack(sigs) if sigs else np.empty((0, k), dtype=np.int64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids] + [pa.array(mat[:, i], type=pa.int64()) for i in range(k)],
-                names=[id_col] + [f"mh_{i}" for i in range(k)],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
-
+    fields = _long_fields(*(f"mh_{i}" for i in range(len(params))))
+    return per_doc_arrow(docs, id_col, text_col, fields, signature)
 
 
 def _bit_votes(hs, bit_idx):
     """Per-bit one-counts of a uint64 hash array, accumulated in
-    64k-hash chunks: the obvious `(hs[:, None] >> bits) & 1` expands to
-    a tokens x n_bits int64 matrix — ~0.5 GB transient for a single
-    1M-token document, times one per concurrent Arrow worker (review-
-    found). Chunking caps the transient at ~32 MB while keeping the
-    vectorized inner loop."""
+    _CHUNK-hash chunks: the obvious `(hs[:, None] >> bits) & 1` expands
+    to a tokens x n_bits int64 matrix. Chunking caps the transient at
+    ~32 MB while keeping the vectorized inner loop."""
     ones = np.zeros(len(bit_idx), dtype=np.int64)
-    for s in range(0, len(hs), 65536):
-        chunk = hs[s : s + 65536]
+    for s in range(0, len(hs), _CHUNK):
+        chunk = hs[s : s + _CHUNK]
         ones += ((chunk[:, None] >> bit_idx) & np.uint64(1)).sum(
             axis=0, dtype=np.int64
         )
     return ones
+
+
+def _simhash(hs, n_bits: int) -> int:
+    """SimHash of a uint64 token-hash array as a signed long: each of
+    the low n_bits votes ±1 (multiplicity kept), bit set iff the vote
+    sum > 0."""
+    bit_idx = np.arange(n_bits, dtype=np.uint64)
+    votes = 2 * _bit_votes(hs, bit_idx) - len(hs)
+    fp = ((votes > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
+    return int(fp.view(np.int64))
 
 
 def simhash_fingerprints_portable_arrow(docs, n_bits, id_col, text_col):
@@ -246,51 +265,28 @@ def simhash_fingerprints_portable_arrow(docs, n_bits, id_col, text_col):
     .simhash_fingerprints_portable: per-token md5_low60, each of the low
     n_bits votes ±1 (multiplicity kept), bit set iff vote sum > 0. Docs
     whose tokenization yields only empty strings emit no row."""
-    from pyspark.sql import types as T
+    low60 = md5_low60
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("simhash", T.LongType(), False)]
-    )
-    bit_idx = np.arange(n_bits, dtype=np.uint64)
+    def simhash(t):
+        toks = _tokens(t)
+        if not toks:
+            return None
+        hs = np.fromiter(
+            (low60(w.encode("utf-8")) for w in toks),
+            dtype=np.uint64,
+            count=len(toks),
+        )
+        return (_simhash(hs, n_bits),)
 
-    def gen(batches):
-        import pyarrow as pa
-
-        low60 = md5_low60
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            fps = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = np.fromiter(
-                    (low60(w.encode("utf-8")) for w in toks),
-                    dtype=np.uint64,
-                    count=len(toks),
-                )
-                ones = _bit_votes(hs, bit_idx)
-                votes = 2 * ones - len(toks)
-                fp = int(((votes > 0).astype(np.uint64) << bit_idx).sum())
-                keep.append(j)
-                fps.append(fp)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(np.asarray(fps, dtype=np.int64), type=pa.int64())],
-                names=[id_col, "simhash"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return per_doc_arrow(docs, id_col, text_col, _long_fields("simhash"), simhash)
 
 
 # ---------------- repetition signals (operators/quality.py) ----------
 
-_RE_LINE = re.compile(r"\n")
-_RE_PARA = re.compile(r"\n{2,}")
+_UNIT_SPLIT = {
+    "dup_line_frac": re.compile(r"\n"),
+    "dup_para_frac": re.compile(r"\n{2,}"),
+}
 
 
 def _dup_frac_py(units):
@@ -335,44 +331,25 @@ def repetition_stats_arrow(docs, id_col, text_col, signals, gram_n):
     statistic, so no row ever needed to leave its partition (guide
     §2.4). Values are the raw unrounded doubles (integer counts and one
     IEEE division — bit-identical to the JVM aggregate); rounding and
-    the 0.0 coalesce stay in the caller's JVM projection."""
+    the 0.0 coalesce stay in the caller's JVM projection. Every doc
+    keeps a row: NULL text is read as '', whose signals are all NULL."""
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0]]
-        + [T.StructField(s, T.DoubleType(), True) for s in signals]
-    )
-    want_line = "dup_line_frac" in signals
-    want_para = "dup_para_frac" in signals
-    grams = [(s, gram_n[s]) for s in signals if s in gram_n]
+    want_toks = any(s in gram_n for s in signals)
 
-    def gen(batches):
-        import pyarrow as pa
+    def stats(t):
+        toks = _tokens(t) if want_toks else None
+        return tuple(
+            _dup_frac_py(_UNIT_SPLIT[s].split(t))
+            if s in _UNIT_SPLIT
+            else _top_gram_frac_py(toks, gram_n[s])
+            for s in signals
+        )
 
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            cols: dict[str, list] = {s: [] for s in signals}
-            for t in texts:
-                if t is None:
-                    for s in signals:
-                        cols[s].append(None)
-                    continue
-                if want_line:
-                    cols["dup_line_frac"].append(_dup_frac_py(_RE_LINE.split(t)))
-                if want_para:
-                    cols["dup_para_frac"].append(_dup_frac_py(_RE_PARA.split(t)))
-                if grams:
-                    toks = [w for w in _JAVA_WS.split(t.strip(" ")) if w != ""]
-                    for s, n in grams:
-                        cols[s].append(_top_gram_frac_py(toks, n))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)]
-                + [pa.array(cols[s], type=pa.float64()) for s in signals],
-                names=[id_col] + list(signals),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    text = F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
+    fields = [T.StructField(s, T.DoubleType(), True) for s in signals]
+    return per_doc_arrow(docs.select(id_col, text), id_col, text_col, fields, stats)
 
 
 # ---------------- XXH64 (Spark F.xxhash64 twin, seed 42) -------------
@@ -399,26 +376,19 @@ def xxh64_bytes(data: bytes, seed: int = 42) -> int:
     n = len(data)
     i = 0
     if n >= 32:
-        v1 = (seed + _XP1 + _XP2) & _M64
-        v2 = (seed + _XP2) & _M64
-        v3 = seed
-        v4 = (seed - _XP1) & _M64
+        vs = [
+            (seed + _XP1 + _XP2) & _M64,
+            (seed + _XP2) & _M64,
+            seed,
+            (seed - _XP1) & _M64,
+        ]
         while i + 32 <= n:
-            for k, v in enumerate((v1, v2, v3, v4)):
+            for k in range(4):
                 lane = int.from_bytes(data[i + 8 * k : i + 8 * k + 8], "little")
-                v = (v + lane * _XP2) & _M64
-                v = (_rotl(v, 31) * _XP1) & _M64
-                if k == 0:
-                    v1 = v
-                elif k == 1:
-                    v2 = v
-                elif k == 2:
-                    v3 = v
-                else:
-                    v4 = v
+                vs[k] = (_rotl((vs[k] + lane * _XP2) & _M64, 31) * _XP1) & _M64
             i += 32
-        acc = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
+        acc = sum(_rotl(v, r) for v, r in zip(vs, (1, 7, 12, 18))) & _M64
+        for v in vs:
             acc ^= (_rotl((v * _XP2) & _M64, 31) * _XP1) & _M64
             acc = ((acc * _XP1) + _XP4) & _M64
     else:
@@ -467,69 +437,39 @@ def _xxh64_lanes8(lanes, seed: int = 42):
     return acc.view(np.int64)
 
 
-def _winnow_doc_fast(t: str, k: int, w: int):
-    """Fast-mode (xxhash64, seed 42 — F.xxhash64's default) twin of
-    _winnow_doc. ASCII docs vectorize (k-byte grams -> uint64 lanes);
-    others fall back to the scalar spec implementation per gram."""
-    n = len(t)
-    m = n - k + 1
-    if m < w:
-        return None
+def _xxh_grams(t: str, k: int):
+    """xxhash64 (seed 42 — F.xxhash64's default) of every character
+    k-gram of t, as int64. ASCII docs with k == 8 vectorize (k-byte
+    grams -> uint64 lanes); others go through the length-classed
+    vectorized path."""
+    m = max(len(t) - k + 1, 0)
     tb = t.encode("utf-8")
-    if len(tb) == n and k == 8:
+    if len(tb) == len(t) and k == 8:
         a = np.frombuffer(tb, dtype=np.uint8).astype(np.uint64)
         lanes = np.zeros(m, dtype=np.uint64)
         with np.errstate(over="ignore"):
             for i in range(8):
                 lanes |= a[i : i + m] << np.uint64(8 * i)
-        hs = _xxh64_lanes8(lanes)
-    else:
-        # non-ASCII (or non-default k): grams are variable-length in
-        # bytes, so hash them through the length-classed vectorized
-        # path instead of a per-gram scalar loop (review-found cliff:
-        # one 'é' in a 10k-char doc sent every gram through interpreted
-        # Python at µs each)
-        hs = xxh64_strings([t[i : i + k] for i in range(m)]).view(np.int64)
-    wm = np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)])
-    return np.unique(wm)
+        return _xxh64_lanes8(lanes)
+    # non-ASCII (or non-default k): grams are variable-length in
+    # bytes, so hash them through the length-classed vectorized
+    # path instead of a per-gram scalar loop (review-found cliff:
+    # one 'é' in a 10k-char doc sent every gram through interpreted
+    # Python at µs each)
+    return xxh64_strings([t[i : i + k] for i in range(m)]).view(np.int64)
 
 
 def winnow_fingerprints_fast_arrow(docs, k, w, id_col, text_col):
     """(id, fingerprint) — bit-identical to the JVM expression form of
     operators.winnow.winnow_fingerprints(hash_mode='fast')."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("fingerprint", T.LongType(), False),
-        ]
+    return per_doc_arrow(
+        docs,
+        id_col,
+        text_col,
+        _long_fields("fingerprint"),
+        lambda t: _window_min_unique(_xxh_grams(t, k), w),
+        many=True,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                u = _winnow_doc_fast(t, k, w)
-                if u is None:
-                    continue
-                counts[j] = len(u)
-                parts.append(u)
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            fps = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(fps, type=pa.int64())],
-                names=[id_col, "fingerprint"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def _xxh64_fixed_len(mat, seed: int = 42):
@@ -614,44 +554,12 @@ def simhash_fingerprints_fast_arrow(docs, id_col, text_col):
     (multiplicity kept), bit set iff vote sum > 0. One narrow Arrow
     stage instead of explode(tokens) → groupBy(id) with 64 sum()
     aggregates (64 aggregate-buffer updates per token row)."""
-    from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("simhash", T.LongType(), False)]
-    )
-    bit_idx = np.arange(64, dtype=np.uint64)
+    def simhash(t):
+        toks = _tokens(t)
+        return (_simhash(xxh64_strings(toks), 64),) if toks else None
 
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            fps = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = xxh64_strings(toks)
-                ones = _bit_votes(hs, bit_idx)
-                votes = 2 * ones - len(toks)
-                fp = int(
-                    ((votes > 0).astype(np.uint64) << bit_idx).sum(
-                        dtype=np.uint64
-                    )
-                )
-                keep.append(j)
-                fps.append(fp - (1 << 64) if fp >= (1 << 63) else fp)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(np.asarray(fps, dtype=np.int64), type=pa.int64())],
-                names=[id_col, "simhash"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return per_doc_arrow(docs, id_col, text_col, _long_fields("simhash"), simhash)
 
 
 def _xxh64_int_lane(seeds, i: int):
@@ -685,42 +593,18 @@ def text_embedding_arrow(docs, dim, id_col, text_col):
     the element-wise division is the same IEEE operation."""
     from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("embedding", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
+    def embedding(t):
+        toks = _tokens(t)
+        if not toks:
+            return None
+        hs = xxh64_strings(toks)
+        buckets = hs.view(np.int64) % dim  # pmod: numpy % is nonneg
+        signs = ((_xxh64_int_lane(hs, 1).view(np.int64) % 2) * 2 - 1).astype(
+            np.float64
+        )
+        v = np.bincount(buckets, weights=signs, minlength=dim)
+        norm = float(np.sqrt((v * v).sum()))
+        return None if norm == 0.0 else (v / norm,)
 
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            embs = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = xxh64_strings(toks)
-                buckets = hs.view(np.int64) % dim  # pmod: numpy % is nonneg
-                signs = (
-                    (_xxh64_int_lane(hs, 1).view(np.int64) % 2) * 2 - 1
-                ).astype(np.float64)
-                v = np.bincount(buckets, weights=signs, minlength=dim)
-                norm = float(np.sqrt((v * v).sum()))
-                if norm == 0.0:
-                    continue
-                keep.append(j)
-                embs.append(v / norm)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(embs, type=pa.list_(pa.float64()))],
-                names=[id_col, "embedding"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    field = T.StructField("embedding", T.ArrayType(T.DoubleType(), False), False)
+    return per_doc_arrow(docs, id_col, text_col, [field], embedding)

@@ -325,7 +325,12 @@ def minhash_lsh_dedup_portable(
     same plan family as the fast path — one shuffle for the K-min
     signatures (map-side combine), band buckets as collect_list with the
     mega-bucket cap, JVM array pair expansion, exact signature compare
-    for the Jaccard estimate."""
+    for the Jaccard estimate.
+
+    Precondition: id_col is unique. The Arrow signature stage emits one
+    signature per input ROW, so two rows sharing an id are not merged
+    into one signature over their union of grams (as the former
+    groupBy(id) form did) and can pair with themselves in banding."""
     from docling_pdf_spark.functions.arrowhash import (
         minhash_signatures_portable_arrow,
     )

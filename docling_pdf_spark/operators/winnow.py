@@ -34,17 +34,6 @@ WINNOW_K = 8  # k-gram length (chars)
 WINNOW_W = 4  # window length (hashes)
 
 
-from docling_pdf_spark.functions.hashing import portable_hash60
-
-# 'portable' (functions.hashing.portable_hash60, DuckDB-reproducible) is
-# ~35% slower end-to-end than xxhash64 (measured sf0.1)
-_HASHES = {
-    "portable": portable_hash60,
-    "fast": F.xxhash64,
-    "jvm-fast": F.xxhash64,  # reference JVM form of 'fast' (see below)
-}
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = WINNOW_K,
@@ -79,6 +68,10 @@ def winnow_fingerprints(
         )
 
         return winnow_fingerprints_fast_arrow(docs, k, w, id_col, text_col)
+    if hash_mode != "jvm-fast":
+        raise ValueError(
+            f"hash_mode must be portable|fast|jvm-fast, got {hash_mode!r}"
+        )
     from docling_pdf_spark.functions.scanspread import spread_unsplittable
 
     docs = spread_unsplittable(docs.select(F.col(id_col), F.col(text_col)))
@@ -87,11 +80,10 @@ def winnow_fingerprints(
         F.length(text) >= k,
         F.sequence(F.lit(1), F.length(text) - (k - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    gram_hash = _HASHES[hash_mode]
     hashed = docs.select(
         F.col(id_col),
         F.transform(
-            gram_starts, lambda i: gram_hash(text.substr(i, F.lit(k)))
+            gram_starts, lambda i: F.xxhash64(text.substr(i, F.lit(k)))
         ).alias("hs"),
     )
     hs = F.col("hs")

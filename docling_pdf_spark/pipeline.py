@@ -2,7 +2,7 @@
 
     scan documents (pruned by resume bucket filter)
       → salted repartition on (cost_bucket, salt)     # skew-taming shuffle
-      → mapInPandas(extract_iter)                     # ONLY Python stage
+      → mapInArrow(_chunked_extract_arrow)            # ONLY Python stage
       → write documents_extracted partitioned by bucket (idempotent)
       → per-bucket metrics agg → _progress manifest commit
 

@@ -31,6 +31,14 @@ def _export_package_to_workers() -> None:
         )
 
 
+def _default_driver_memory() -> str:
+    """About 60% of the host's physical memory (MemTotal on Linux),
+    leaving the rest to the Python workers and the OS (a fixed 48g
+    default exceeded small hosts and got the JVM OOM-killed)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total * 6 // 10 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "docling-pdf-spark",
     local_cores: int | None = None,
@@ -46,7 +54,8 @@ def get_spark(
         # wreck scaling; on a real cluster executor memory comes from
         # the site config instead.
         b = b.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
         )
         # MB-sized document payloads become humongous objects under
         # G1's default region size and GC time explodes at high task

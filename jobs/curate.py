@@ -157,16 +157,16 @@ def curate(
                     f"{sorted(_need)}, found {sorted(_cols)}"
                 )
     if quality_exemplars is not None:
+        # validate WITHOUT truncation: cast-to-int would floor a
+        # fractional label like 0.9 to 0 and let it pass, only to crash
+        # hours later at LogisticRegression.fit (round-6 advice, low).
+        # try_cast turns a non-numeric label ('yes') into NULL instead
+        # of an ANSI cast error, so NULL covers both it and a missing
+        # label.
+        _label = F.col("label").try_cast("double")
         _bad = (
             spark.read.parquet(quality_exemplars)
-            .where(
-                # validate WITHOUT truncation: cast-to-int would floor
-                # a fractional label like 0.9 to 0 and let it pass,
-                # only to crash hours later at LogisticRegression.fit
-                # (round-6 advice, low)
-                F.col("label").isNull()
-                | ~F.col("label").cast("double").isin(0.0, 1.0)
-            )
+            .where(_label.isNull() | ~_label.isin(0.0, 1.0))
             .limit(1)
             .count()
         )

@@ -800,6 +800,24 @@ def test_curate_fractional_label_rejected(spark, tmp_path):
         curate(spark, missing, out, quality_exemplars=frac_labels)
 
 
+def test_curate_non_numeric_label_rejected(spark, tmp_path):
+    """A non-numeric label like 'yes' must raise the guard's ValueError
+    up front. A plain cast either fails with a Spark cast error (ANSI
+    mode) or yields NULL, which isin(0.0, 1.0) lets through."""
+    import pytest as _pytest
+
+    from jobs.curate import curate
+
+    missing = str(tmp_path / "nope.parquet")
+    out = str(tmp_path / "o")
+    str_labels = str(tmp_path / "str.parquet")
+    pq.write_table(
+        pa.table({"text": ["a", "b"], "label": ["yes", "1"]}), str_labels
+    )
+    with _pytest.raises(ValueError, match="0 or 1"):
+        curate(spark, missing, out, quality_exemplars=str_labels)
+
+
 def test_curate_mix_stratum_typo_fails_fast(spark, tmp_path):
     """Round-6 advice (low): a typo'd --mix-stratum column must raise
     right after extraction, not after the whole funnel has executed."""

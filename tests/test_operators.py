@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from docling_pdf_spark.fixtures import gen_media_assets
+from docling_pdf_spark.functions import arrowhash as ah
 from docling_pdf_spark.operators.dedup import (
+    SHINGLE_WORDS,
+    affine_params,
     minhash_lsh_dedup,
     simhash_fingerprints,
     simhash_near_dups,
@@ -17,6 +20,7 @@ from docling_pdf_spark.operators.multimodal import (
     link_media_to_documents,
     media_features,
 )
+from docling_pdf_spark.operators.quality import _TOP_GRAM_N, ALL_SIGNALS
 from docling_pdf_spark.operators.similarity import (
     cosine_topk,
     ivf_assign,
@@ -769,6 +773,13 @@ def test_winnow_fast_arrow_matches_jvm_form(spark):
     assert jvm == arrow and len(arrow) > 0
 
 
+def test_winnow_unknown_hash_mode_raises(spark):
+    from docling_pdf_spark.operators.winnow import winnow_fingerprints
+
+    docs = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="hash_mode"):
+        winnow_fingerprints(docs, hash_mode="portble")
+
 def test_simhash_fast_arrow_matches_jvm_form(spark):
     """Round 7: the fast SimHash fingerprints run through the
     vectorized XXH64 Arrow kernel; they must be bit-identical to the
@@ -810,3 +821,71 @@ def test_text_embedding_arrow_matches_jvm_form(spark):
         jvm = {r[0]: tuple(r[1]) for r in _text_embedding_jvm(docs, dim=dim).collect()}
         arrow = {r[0]: tuple(r[1]) for r in text_embedding(docs, dim=dim).collect()}
         assert jvm == arrow and len(arrow) > 0, dim
+
+
+# name -> (kernel(docs), too-short text) for every public kernel in
+# functions/arrowhash.py. Token kernels have no length floor beyond one
+# token, so their too-short doc is whitespace-only too.
+_A = ("doc_id", "text")
+_ARROW_KERNELS = {
+    "winnow": (lambda d: ah.winnow_fingerprints_arrow(d, 8, 4, *_A), "abcdefghij"),
+    "winnow_fast": (
+        lambda d: ah.winnow_fingerprints_fast_arrow(d, 8, 4, *_A), "abcdefghij"),
+    "bucketed_grams": (lambda d: ah.bucketed_grams_arrow(d, 2, 100, *_A), "word"),
+    "minhash": (lambda d: ah.minhash_signatures_portable_arrow(
+        d, affine_params(8), SHINGLE_WORDS, *_A), "four words only here"),
+    "simhash_portable": (
+        lambda d: ah.simhash_fingerprints_portable_arrow(d, 60, *_A), "\x0b\f"),
+    "simhash_fast": (lambda d: ah.simhash_fingerprints_fast_arrow(d, *_A), "\x0b\f"),
+    "embedding": (lambda d: ah.text_embedding_arrow(d, 16, *_A), "\x0b\f"),
+    "repetition": (lambda d: ah.repetition_stats_arrow(
+        d, *_A, ALL_SIGNALS, _TOP_GRAM_N), "\x0b\f"),
+}
+
+
+@pytest.mark.parametrize("name", list(_ARROW_KERNELS))
+def test_per_doc_arrow_contract(spark, name):
+    """The shared Arrow harness: NULL, '', whitespace-only and too-short
+    docs emit no row, while an ordinary doc does. Repetition is the one
+    kernel that keeps a row per doc; its NULL and '' rows are all-NULL."""
+    kernel, short = _ARROW_KERNELS[name]
+    docs = spark.createDataFrame(
+        [(0, BASE), (1, None), (2, ""), (3, "\t\n\r\t"), (4, short)],
+        "doc_id long, text string",
+    )
+    rows = kernel(docs).collect()
+    if name == "repetition":
+        by_id = {r["doc_id"]: list(r)[1:] for r in rows}
+        assert len(rows) == 5 and sorted(by_id) == [0, 1, 2, 3, 4]
+        assert by_id[1] == by_id[2] == [None] * 5
+        assert all(v is not None for v in by_id[0])
+    else:
+        assert {r["doc_id"] for r in rows} == {0}
+
+
+def test_minhash_signature_memory_is_chunked():
+    """A document with ~1M distinct grams must not build the full
+    (num_hashes x grams) matrix (~0.5 GB transient at 32 hashes): the
+    signature is accumulated in gram chunks under a 64 MB peak, and
+    equals the unchunked formula."""
+    import tracemalloc
+
+    import numpy as np
+
+    from docling_pdf_spark.operators.dedup import MERSENNE31
+
+    params = affine_params(32)
+    a = np.array([p for p, _ in params], dtype=np.int64).reshape(-1, 1)
+    b = np.array([q for _, q in params], dtype=np.int64).reshape(-1, 1)
+    base = np.random.default_rng(7).integers(
+        0, MERSENNE31, size=1_000_000, dtype=np.int64
+    )
+    tracemalloc.start()
+    try:
+        sig = ah._minhash(base, a, b, MERSENNE31)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20, f"peak {peak / 2**20:.0f} MB"
+    want = [int(((ai * base + bi) % MERSENNE31).min()) for ai, bi in params]
+    assert sig.tolist() == want
